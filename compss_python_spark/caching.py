@@ -23,7 +23,11 @@ lazy plan still reads) must NOT be released.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 # RDD ids of width-guard pins (width.ensure_min_partitions registers each
 # pin here at creation).  A pinned widened scan is the one checkpoint
@@ -48,10 +52,10 @@ def release_checkpoint(df: DataFrame) -> None:
     Walks the plan's leaves and unpersists each ``LogicalRDD`` (the node
     ``localCheckpoint`` leaves behind) — EXCEPT width-guard pins
     (:data:`_WIDTH_PINS`), which are shared-by-design across consumers and
-    released only via :func:`release_width_pins`.  Non-blocking; silently
-    ignores plans with no checkpointed leaves.  Never raises — releasing
-    storage is an optimization, not a correctness step, and a py4j hiccup
-    must not fail the operator.
+    released only via :func:`release_width_pins`.  Non-blocking; plans with
+    no checkpointed leaves are a no-op.  Never raises — releasing storage
+    is an optimization, not a correctness step, so a py4j hiccup is logged
+    as a warning instead of failing the operator.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -63,7 +67,7 @@ def release_checkpoint(df: DataFrame) -> None:
                 if rdd.id() not in _WIDTH_PINS:
                     rdd.unpersist(False)
     except Exception:
-        pass
+        _log.warning("release_checkpoint failed", exc_info=True)
 
 
 def release_width_pins(spark: SparkSession) -> None:
@@ -74,7 +78,8 @@ def release_width_pins(spark: SparkSession) -> None:
     between logical units of work, after the results that read the pinned
     scans have been materialized; any pin a still-lazy plan references
     would have to be recomputed-from-nothing and fail, same contract as
-    :func:`release_checkpoint`.  Never raises."""
+    :func:`release_checkpoint`.  Never raises; a failure is logged as a
+    warning."""
     try:
         jsc = spark.sparkContext._jsc.sc()
         it = jsc.getPersistentRDDs().iterator()
@@ -85,5 +90,5 @@ def release_width_pins(spark: SparkSession) -> None:
             if rdd.id() in _WIDTH_PINS:
                 rdd.unpersist(False)
     except Exception:
-        pass
+        _log.warning("release_width_pins failed", exc_info=True)
     _WIDTH_PINS.clear()

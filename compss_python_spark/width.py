@@ -14,7 +14,11 @@ a single parquet row group is not splittable.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def ensure_min_partitions(
@@ -72,5 +76,5 @@ def ensure_min_partitions(
         plan = pinned._jdf.queryExecution().analyzed()
         register_width_pin(plan.rdd().id())
     except Exception:
-        pass
+        _log.warning("could not register width pin", exc_info=True)
     return pinned
